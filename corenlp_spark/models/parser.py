@@ -237,11 +237,16 @@ class ArcStandardParser:
         self._pstr: list[str] = []        # pid → pos string
         self._lid: dict[str, int] = {"<null>": 0}
         self._lstr: list[str] = ["<null>"]
-        # r6: one dict per dynamic template, keyed by collision-free
-        # composite ints (pos/label ids < 4096 by construction — registries
-        # only hold the tagset/labelset) or word tuples; replaces the shared
-        # tuple-keyed memo (same resolved ids, fewer allocations per probe)
-        self._tmemo: list[dict] = [dict() for _ in range(19)]
+        # the three word-pair templates resolve through tuple-keyed memos
+        # (the pos/label/valence templates use the dense _ftab tables):
+        # s1w+s2w → (s1 word, s2 word), s1w+s2p → (s1 word, s2 pos id),
+        # s1p+s2w → (s1 pos id, s2 word); each capped at 500k entries
+        self._memo_ww: dict[tuple[str, str], int] = {}
+        self._memo_wp: dict[tuple[str, int], int] = {}
+        self._memo_pw: dict[tuple[int, str], int] = {}
+        # dense template tables are built against this _fid, so they share
+        # its lifetime
+        self._ftab = None
         # (word, pos) → 19-row tuple; Zipfian token distribution makes the
         # hit rate ≈ 1 — capped so a pathological vocabulary cannot grow an
         # executor's memory without bound (beyond the cap, rows are built
@@ -347,7 +352,7 @@ class ArcStandardParser:
         NP = len(self._pstr)
         NL = len(self._lstr)
         VC = max_val
-        t = getattr(self, "_ftab", None)
+        t = self._ftab
         if t is not None and t["NP"] >= NP and t["NL"] >= NL \
                 and t["VC"] >= VC:
             return t
@@ -520,7 +525,7 @@ class ArcStandardParser:
         z = self._zrow
         lab_id = self._lab_id
         bias_row = W[self._bias_row]
-        m15, m16, m17 = self._tmemo[16], self._tmemo[17], self._tmemo[18]
+        m15, m16, m17 = self._memo_ww, self._memo_wp, self._memo_pw
         i64 = np.int64
 
         active = cfgs

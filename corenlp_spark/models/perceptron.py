@@ -216,10 +216,8 @@ class AveragedPerceptronTagger:
         self._tstr = [None] * len(self._tid)
         for t, i in self._tid.items():
             self._tstr[i] = t
-        self._pmemo: dict[tuple, int] = {}
-        # r6: per-template memos (int / small-tuple keys; tag ids < 4096 —
-        # the registry only holds the tagset — so pt2*4096+pt is collision-
-        # free). Same resolved ids as the shared tuple-keyed memo.
+        # per-template memos (int / small-tuple keys; tag ids < 4096 — the
+        # registry only holds the tagset — so pt2*4096+pt is collision-free)
         self._pmemo5: list[dict] = [dict() for _ in range(5)]
 
     def _tag_id(self, t: str) -> int:
@@ -245,7 +243,7 @@ class AveragedPerceptronTagger:
         memo (r6, guide §1.2 per-task work: word types repeat Zipf-style in
         any corpus, so the ~20 f-string builds + dict probes per TOKEN
         collapse to one tuple fetch per repeated word; same value-keyed
-        memo discipline as the existing dynamic-template _pmemo)."""
+        memo discipline as the dynamic-template _pmemo5)."""
         fget = self._fid.get
         z = self._zrow
         wmemo = getattr(self, "_wordmemo", None)

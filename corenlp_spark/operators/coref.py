@@ -23,9 +23,6 @@ Output column:
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from corenlp_spark.data import dictionaries as _dict
@@ -556,33 +553,7 @@ def run_sieves(mentions: list[Mention], tokens: list[dict] | None = None) -> Non
 
 def coref_docs(df: DataFrame) -> DataFrame:
     """DataFrame transform: + coref chains column (doc-local, narrow)."""
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema += f", coref {COREF_TYPE}"
+    from corenlp_spark.plans.fused import coref_phase, docs_of, map_docs
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            chains_col = []
-            for toks, sents in zip(pdf["tokens"], pdf["sentences"]):
-                toks = list(toks)
-                ms = detect_mentions(toks, list(sents))
-                run_sieves(ms, toks)
-                # representative mention per cluster: longest entity mention,
-                # earliest on tie (CorefChain representative semantics)
-                best: dict[int, Mention] = {}
-                for m in ms:
-                    cur = best.get(m.cluster)
-                    rank = (m.kind != "pronoun", len(m.text))
-                    if cur is None or rank > (cur.kind != "pronoun", len(cur.text)):
-                        best[m.cluster] = m
-                chains_col.append([
-                    {"cluster_id": m.cluster, "sent_idx": m.sent,
-                     "start_tok": m.start, "end_tok": m.end, "text": m.text,
-                     "head": m.head_idx, "kind": m.kind,
-                     "representative": best[m.cluster] is m}
-                    for m in ms
-                ])
-            pdf = pdf.copy()
-            pdf["coref"] = chains_col
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_docs(df, {"coref": COREF_TYPE},
+                    lambda pdf: {"coref": coref_phase(docs_of(pdf))})

@@ -21,9 +21,6 @@ Narrow transform: per-doc ``mapInPandas``, zero shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 DEPS_TYPE = "array<struct<sent_idx:int,head:int,dep:int,rel:string>>"
@@ -587,34 +584,8 @@ def parse_sentence(
 
 def depparse_docs(df: DataFrame, model: str | None = None) -> DataFrame:
     """DataFrame transform: + deps edge-list column (doc-level token indices).
-    ``model="trained"`` selects the arc-standard perceptron parser."""
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema += f", deps {DEPS_TYPE}"
+    ``model="rule"`` selects the deterministic clause parser."""
+    from corenlp_spark.plans.fused import docs_of, map_docs, parse_phase
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            deps_col = []
-            for toks, sents in zip(pdf["tokens"], pdf["sentences"]):
-                doc_edges = []
-                for s in sents:
-                    a, b = s["start_tok"], s["end_tok"]
-                    seg = toks[a:b]
-                    edges = parse_sentence(
-                        [t["word"] for t in seg],
-                        [t["pos"] for t in seg],
-                        [t["lemma"] for t in seg],
-                        [t.get("ner", "O") for t in seg],
-                        model=model,
-                    )
-                    for h, d, r in edges:
-                        doc_edges.append(
-                            {"sent_idx": s["sent_idx"],
-                             "head": (h + a) if h >= 0 else -1,
-                             "dep": d + a, "rel": r}
-                        )
-                deps_col.append(doc_edges)
-            pdf = pdf.copy()
-            pdf["deps"] = deps_col
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
+    return map_docs(df, {"deps": DEPS_TYPE},
+                    lambda pdf: {"deps": parse_phase(docs_of(pdf), model)})

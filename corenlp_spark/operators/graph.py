@@ -91,18 +91,3 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
         )
     )
 
-
-def partition_metrics(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition lineage/metrics rows (north rule: per-partition lineage +
-    counts persisted alongside outputs)."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(F.count("*").alias("rows"))
-        .select(
-            F.lit(stage).alias("stage"),
-            F.col("_pid").alias("partition_id"),
-            "rows",
-            F.current_timestamp().alias("ts"),
-        )
-    )

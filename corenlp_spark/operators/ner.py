@@ -24,7 +24,6 @@ Zero shuffle; no per-row Python — everything runs inside mapInPandas batches.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -688,28 +687,11 @@ def tag_ner_batch(sents: list[tuple[list[str], list[str]]]
 
 def ner_docs(df: DataFrame) -> DataFrame:
     """DataFrame transform: + ner, nner fields on the tokens array."""
-    passthrough = [f for f in df.schema.fields if f.name != "tokens"]
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in passthrough)
-    out_schema += f", tokens {NER_TOKENS_TYPE}"
+    from corenlp_spark.plans.fused import docs_of, map_docs, ner_phase
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            new_tokens = []
-            for toks, sents in zip(pdf["tokens"], pdf["sentences"]):
-                toks = [dict(t) for t in toks]
-                for s in sents:
-                    seg = toks[s["start_tok"] : s["end_tok"]]
-                    words = [t["word"] for t in seg]
-                    pos = [t["pos"] for t in seg]
-                    ner, nner = tag_sentence_ner(words, pos)
-                    for t, a, b in zip(seg, ner, nner):
-                        t["ner"], t["nner"] = a, b
-                for t in toks:  # tokens outside any sentence (none expected)
-                    t.setdefault("ner", "O")
-                    t.setdefault("nner", "")
-                new_tokens.append(toks)
-            pdf = pdf.copy()
-            pdf["tokens"] = new_tokens
-            yield pdf
+    def ner(pdf: pd.DataFrame) -> dict[str, list]:
+        docs = docs_of(pdf)
+        ner_phase(docs)
+        return {"tokens": [t for t, _ in docs]}
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_docs(df, {"tokens": NER_TOKENS_TYPE}, ner)

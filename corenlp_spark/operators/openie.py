@@ -502,45 +502,13 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
 
 def openie_docs(df: DataFrame) -> DataFrame:
     """docs(+tokens,+deps) → triples table (exploded)."""
+    from corenlp_spark.plans.fused import triples_frame, triples_phase
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "sent_idx", "subj", "pred", "obj",
-                     "confidence", "subj_head", "obj_head")}
-            for doc_id, toks, sents, deps in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"]
-            ):
-                by_sent: dict[int, list] = {}
-                for e in deps:
-                    by_sent.setdefault(e["sent_idx"], []).append(
-                        (e["head"], e["dep"], e["rel"])
-                    )
-                for s in sents:
-                    edges = by_sent.get(s["sent_idx"], [])
-                    if not edges:
-                        continue
-                    a, b = s["start_tok"], s["end_tok"]
-                    seg = toks[a:b]
-                    g = _Graph(
-                        [t["word"] for t in seg], [t["lemma"] for t in seg],
-                        edges, a, [t["pos"] for t in seg],
-                    )
-                    best: dict[tuple, tuple] = {}
-                    for subj, pred, obj, conf, sh, oh in extract_sentence(g):
-                        key = (subj.lower(), pred.lower(), obj.lower())
-                        if key not in best or best[key][3] < conf:
-                            best[key] = (subj, pred, obj, conf, sh, oh)
-                    for subj, pred, obj, conf, sh, oh in best.values():
-                        rows["doc_id"].append(doc_id)
-                        rows["sent_idx"].append(s["sent_idx"])
-                        rows["subj"].append(subj)
-                        rows["pred"].append(pred)
-                        rows["obj"].append(obj)
-                        rows["confidence"].append(conf)
-                        rows["subj_head"].append(sh)
-                        rows["obj_head"].append(oh)
-            yield pd.DataFrame(rows)
+            yield triples_frame(pdf["doc_id"], [
+                triples_phase(toks, sents, deps) for toks, sents, deps in
+                zip(pdf["tokens"], pdf["sentences"], pdf["deps"])])
 
     return df.mapInPandas(run, schema=TRIPLES_SCHEMA)
 

@@ -20,12 +20,9 @@ The stage is narrow: per-doc, zero shuffle.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-
-from corenlp_spark.operators.tokenize import SENTENCES_TYPE
 
 TAGGED_TOKENS_TYPE = (
     "array<struct<idx:int,word:string,original:string,begin:int,end:int,"
@@ -349,27 +346,11 @@ def lemmatize(word: str, pos: str) -> str:
 
 def tag_docs(df: DataFrame) -> DataFrame:
     """DataFrame transform: + pos, lemma fields on the tokens array."""
-    passthrough = [f for f in df.schema.fields if f.name != "tokens"]
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in passthrough)
-    out_schema += f", tokens {TAGGED_TOKENS_TYPE}"
-    _ = SENTENCES_TYPE  # sentences column passes through
+    from corenlp_spark.plans.fused import docs_of, map_docs, tag_phase
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            new_tokens = []
-            for toks, sents in zip(pdf["tokens"], pdf["sentences"]):
-                words = [t["word"] for t in toks]
-                starts = {s["start_tok"] for s in sents}
-                tags = pos_tag(words, starts)
-                out = []
-                for t, tag in zip(toks, tags):
-                    t = dict(t)
-                    t["pos"] = tag
-                    t["lemma"] = lemmatize(t["word"], tag)
-                    out.append(t)
-                new_tokens.append(out)
-            pdf = pdf.copy()
-            pdf["tokens"] = new_tokens
-            yield pdf
+    def tag(pdf: pd.DataFrame) -> dict[str, list]:
+        docs = docs_of(pdf)
+        tag_phase(docs)
+        return {"tokens": [t for t, _ in docs]}
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_docs(df, {"tokens": TAGGED_TOKENS_TYPE}, tag)

@@ -24,7 +24,7 @@ The input ``spans`` column passes through untouched (span-sequence invariant).
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator
+from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -1059,24 +1059,17 @@ def annotate_doc(spans: Iterable[dict],
 
 def tokenize_docs(df: DataFrame, options: dict | None = None) -> DataFrame:
     """DataFrame transform: docs(doc_id, spans, ...) → + tokens, sentences.
+    Null spans and null span structs give no tokens.
 
     ``options``: PTBTokenizer option subset (DEFAULT_OPTIONS keys)."""
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema += f", tokens {TOKENS_TYPE}, sentences {SENTENCES_TYPE}"
+    from corenlp_spark.plans.fused import map_docs, tokenize_phase
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            toks_col, sents_col = [], []
-            for spans in pdf["spans"]:
-                t, s = annotate_doc(spans, options)
-                toks_col.append(t)
-                sents_col.append(s)
-            pdf = pdf.copy()
-            pdf["tokens"] = toks_col
-            pdf["sentences"] = sents_col
-            yield pdf
+    def tokenize(pdf: pd.DataFrame) -> dict[str, list]:
+        docs = tokenize_phase(pdf["spans"], options)
+        return {"tokens": [t for t, _ in docs], "sentences": [s for _, s in docs]}
 
-    return df.mapInPandas(run, schema=out_schema)
+    return map_docs(df, {"tokens": TOKENS_TYPE, "sentences": SENTENCES_TYPE},
+                    tokenize)
 
 
 # ---------------------------------------------------------------------------

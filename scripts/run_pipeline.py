@@ -45,12 +45,14 @@ def main() -> None:
         alias_dict, canonical_entities, link_mentions,
     )
     from corenlp_spark.operators.graph import (
-        canonicalize_triples, coref_chains_rows, dedup_triples, partition_metrics,
+        canonicalize_triples, coref_chains_rows, dedup_triples,
     )
     from corenlp_spark.operators.mentions import mention_rows
     from corenlp_spark.operators.openie import openie_docs
     from corenlp_spark.plans.fused import annotate_fused
-    from corenlp_spark.plans.pipeline import CheckpointedPipeline
+    from corenlp_spark.plans.pipeline import (
+        CheckpointedPipeline, partition_rows, write_partition_metrics,
+    )
     from corenlp_spark.session import get_spark
 
     spark = get_spark(
@@ -86,14 +88,17 @@ def main() -> None:
     ents = canonical_entities(linked)
     ents.write.mode("overwrite").parquet(f"{args.output}/entities")
 
-    for name, df in (("triples", kg), ("entities", ents)):
-        partition_metrics(df, name).write.mode("overwrite").parquet(
-            f"{args.output}/_metrics_{name}"
-        )
+    # counts from the written files' footers: re-counting the lazy plans
+    # would recompute the whole KG and the entity linking
+    n_rows = {}
+    for name in ("triples", "entities"):
+        counts = partition_rows(f"{args.output}/{name}")
+        write_partition_metrics(counts, name, f"{args.output}/_metrics_{name}")
+        n_rows[name] = sum(counts.values())
     manifest = {
         "wall_s": round(time.time() - t0, 2),
-        "n_triples": spark.read.parquet(f"{args.output}/triples").count(),
-        "n_entities": spark.read.parquet(f"{args.output}/entities").count(),
+        "n_triples": n_rows["triples"],
+        "n_entities": n_rows["entities"],
         "input": args.input or f"synth:{args.synth}",
         "spark_conf": {k: v for k, v in spark.sparkContext.getConf().getAll()
                        if k.startswith("spark.sql") or k.endswith("master")},

@@ -120,12 +120,40 @@ def test_dedup_triples(spark):
     assert all(r.support >= 1 and r.n_docs >= 1 for r in rows)
 
 
+def _kg(df):
+    return sorted(map(tuple, dedup_triples(df).collect()))
+
+
 def test_checkpoint_resume(spark, tmp_path):
+    import json
+
+    from corenlp_spark.plans.pipeline import STAGES
+
     root = str(tmp_path / "ckpt")
     pipe = CheckpointedPipeline(spark, root, partitions=4)
-    t1 = pipe.run(synth_docs(spark, 30))
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint_resume_fresh", "fresh CheckpointedPipeline.run")
+    try:
+        t1 = pipe.run(synth_docs(spark, 30))
+    finally:
+        sc.setJobGroup("checkpoint_resume_rest", "rest of the test")
+    stages = [st.name for st in STAGES] + ["triples_raw"]
+    # lineage costs no job of its own: at most the write (and the
+    # repartition's shuffle) per checkpoint
+    jobs = sc.statusTracker().getJobIdsForGroup("checkpoint_resume_fresh")
+    assert len(jobs) <= 2 * len(stages), jobs
     n1 = t1.count()
     assert n1 > 0
+    # lineage of every stage agrees with what the stage wrote
+    for stage in stages:
+        n = spark.read.parquet(os.path.join(root, stage)).count()
+        with open(os.path.join(root, f"_lineage_{stage}.json")) as f:
+            meta = json.load(f)
+        assert meta["stage"] == stage and meta["rows"] == n and meta["wall_s"] > 0
+        pm = spark.read.parquet(os.path.join(root, f"_metrics_{stage}")).collect()
+        assert [r.stage for r in pm] == [stage] * len(pm)
+        assert sum(r.rows for r in pm) == n
+        assert len({r.partition_id for r in pm}) == len(pm)
     # simulate kill after ner: delete later checkpoints, resume must rebuild
     import shutil
 
@@ -134,6 +162,28 @@ def test_checkpoint_resume(spark, tmp_path):
     pipe2 = CheckpointedPipeline(spark, root, partitions=4)
     t2 = pipe2.run(synth_docs(spark, 30))
     assert t2.count() == n1
-    # lineage metrics persisted per stage
-    assert os.path.exists(os.path.join(root, "_lineage_tokenize.json"))
-    assert os.path.exists(os.path.join(root, "_metrics_triples_raw"))
+
+
+def test_null_rows_do_not_kill_a_task(spark, tmp_path):
+    """A doc with null spans and a doc whose only span is null pass through
+    both drivers of the chain; they yield no triples and leave the other
+    docs' KG as it is."""
+    from corenlp_spark.data.synth import DOCS_SCHEMA
+    from corenlp_spark.plans.fused import extract_triples_fused
+
+    good = synth_docs(spark, 20)
+    bad = spark.createDataFrame(
+        [("bad-null-spans", None), ("bad-null-span", [None])], DOCS_SCHEMA)
+    docs = good.unionByName(bad)
+    expected = _kg(extract_triples_fused(good))
+    assert expected
+
+    root = str(tmp_path / "ckpt")
+    raw = CheckpointedPipeline(spark, root).run(docs)
+    ann = spark.read.parquet(os.path.join(root, "coref"))
+    assert ann.count() == 22
+    fused = extract_triples_fused(docs)
+    for triples in (raw, fused):
+        assert triples.filter(F.col("doc_id").startswith("bad-")).count() == 0
+    assert _kg(canonicalize_triples(raw, coref_chains_rows(ann))) == expected
+    assert _kg(fused) == expected
