@@ -136,15 +136,6 @@ def detect_mentions(tokens: list[dict], sentences: list[dict]) -> list[Mention]:
     return mentions
 
 
-def _genders_agree(mi, mj) -> bool:
-    """Rules.entityAttributesAgree gender component: a MALE/FEMALE conflict
-    blocks a merge ("John Smith" never head-matches "Mary Smith");
-    UNKNOWN is compatible with anything."""
-    gi = _dict.gender_of(mi.text, mi.head_word)
-    gj = _dict.gender_of(mj.text, mj.head_word)
-    return "UNKNOWN" in (gi, gj) or gi == gj
-
-
 def _strip_det(text: str) -> str:
     ws = text.lower().split()
     while ws and ws[0] in _STOP_DETS:

@@ -24,7 +24,8 @@ The input ``spans`` column passes through untouched (span-sequence invariant).
 from __future__ import annotations
 
 import re
-from typing import Iterable
+from types import MappingProxyType
+from typing import Iterable, Mapping
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -382,24 +383,6 @@ DEFAULT_OPTIONS = {
 }
 
 
-_DEFAULT_RESOLVED: dict | None = None
-
-
-def _resolve_options(options: dict | None) -> dict:
-    global _DEFAULT_RESOLVED
-    if not options:
-        # default options resolve once; callers never mutate the dict
-        # (per-line recursion copies before overriding)
-        if _DEFAULT_RESOLVED is None:
-            d = dict(DEFAULT_OPTIONS)
-            _apply_option_defaults(d)
-            _DEFAULT_RESOLVED = d
-        return _DEFAULT_RESOLVED
-    opt = dict(DEFAULT_OPTIONS, **options)
-    _apply_option_defaults(opt)
-    return opt
-
-
 def _apply_option_defaults(opt: dict) -> None:
     if opt["quotes"] is None:
         opt["quotes"] = "latex" if opt["normalize_quotes"] else "not_cp1252"
@@ -411,6 +394,19 @@ def _apply_option_defaults(opt: dict) -> None:
         opt["strict_acronym"] = bool(opt["strict_treebank3"])
     if opt["strict_fraction"] is None:
         opt["strict_fraction"] = bool(opt["strict_treebank3"])
+
+
+def _resolve_options(options: dict | None) -> Mapping:
+    if not options:
+        return _DEFAULT_RESOLVED
+    opt = dict(DEFAULT_OPTIONS, **options)
+    _apply_option_defaults(opt)
+    return opt
+
+
+# default options resolve once and are shared by every caller, so they are
+# read-only (per-line recursion copies before overriding)
+_DEFAULT_RESOLVED = MappingProxyType(_resolve_options(DEFAULT_OPTIONS))
 
 
 # quote mapping tables per enum value (PTBLexer latexQuotes/unicodeQuotes/
@@ -679,10 +675,6 @@ def _split_on(tokens, cls: str):
         else:
             out.append((w, o, b, e))
     return out
-
-
-def _split_hyphenated(tokens):
-    return _split_on(tokens, "-")
 
 
 def _sentend_follows(s: str, i: int) -> bool:

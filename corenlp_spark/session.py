@@ -9,8 +9,48 @@ rely on AQE coalescing, which is enabled here.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def _skip_unchanged_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_mtime_ns, st_size)`` changed since this importer last read it.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task (``setup_spark_files`` in ``pyspark/worker_util.py``). Before
+    CPython 3.13 that re-reads the whole central directory of every zip on
+    the import path, eagerly (gh-103200 made it lazy in 3.13). A warm worker
+    holds 16 importers: pyspark.zip (1,328 entries) once per imported pyspark
+    subpackage, 8-15 ms each; the py4j zip; and the spark-core jar (5,359
+    entries, no .py files, 36-95 ms each) that Spark puts on the worker's
+    PYTHONPATH. Measured inside warm workers, four tasks at once on a
+    4-vCPU host: 0.27-0.29 s per call unguarded, under 1 ms guarded, for
+    archives that never change. This package's ``__init__`` imports this
+    module, so every worker that unpickles one of its UDFs installs the
+    check; the first call per importer still re-reads.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    original = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            self.__dict__.pop("_archive_sig", None)
+            return original(self)
+        sig = (st.st_mtime_ns, st.st_size)
+        if self.__dict__.get("_archive_sig") != sig:
+            original(self)
+            self._archive_sig = sig
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_skip_unchanged_zip_rereads()
 
 
 def get_spark(

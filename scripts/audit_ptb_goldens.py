@@ -7,10 +7,11 @@ reference file stays the single source of truth for the remaining tranche.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 JAVA = "/root/reference/test/src/edu/stanford/nlp/process/PTBTokenizerTest.java"
 

@@ -11,10 +11,12 @@ Run: python scripts/train_models.py
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from corenlp_spark.data.kbp_corpus import lr_training_rows  # noqa: E402
 from corenlp_spark.data.train_corpus import (  # noqa: E402
@@ -117,7 +119,7 @@ def main():
     # rule-parser output, only held-out hand gold.
     from corenlp_spark.operators.ner import tag_sentence_ner
 
-    sys.path.insert(0, "/root/repo/tests")
+    sys.path.insert(0, os.path.join(REPO, "tests"))
     from test_openie_golden import GOLDEN as OPENIE_SUITE
 
     gold_texts = {" ".join(w) for w, _, _ in gold_trees.load()}

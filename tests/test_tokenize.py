@@ -222,6 +222,23 @@ def test_tokenizer_options():
             assert text[b:e] == o
 
 
+def test_default_options_are_read_only():
+    """Every default-options caller shares one resolved mapping, so a write
+    through it must fail instead of leaking into later calls."""
+    import pytest
+
+    from corenlp_spark.operators.tokenize import _resolve_options
+
+    opt = _resolve_options(None)
+    assert opt is _resolve_options({})
+    with pytest.raises(TypeError):
+        opt["normalize_quotes"] = False
+    assert opt["quotes"] == "latex"
+    assert opt.get("tokenize_per_line") is False
+    assert dict(opt, tokenize_per_line=True)["tokenize_per_line"] is True
+    assert [t[0] for t in tokenize_text('“hi”')] == ["``", "hi", "''"]
+
+
 def test_docdate_from_tags(spark):
     import pandas as pd
 
