@@ -204,21 +204,11 @@ class Pipeline:
 def annotate_text(spark, text: str,
                   annotators: str = "tokenize,ssplit,pos,lemma,ner") -> dict:
     """The `simple` API analog (simple/Document.java:39): one string in,
-    one CoreNLP-JSON document out (driver-side convenience; the DataFrame
-    path above is the scale path)."""
+    one CoreNLP-JSON document out — the server's request path
+    (``serve._render``) without the HTTP hop; the DataFrame path above is
+    the scale path."""
     import json
 
-    import pandas as pd
+    from corenlp_spark import serve
 
-    from corenlp_spark.data.synth import DOCS_SCHEMA
-
-    docs = spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": ["doc"],
-            "spans": [[{"kind": "text", "text": text,
-                        "media_ref": None, "offset": 0}]],
-        }),
-        schema=DOCS_SCHEMA,
-    )
-    pipe = Pipeline(annotators + ",depparse,coref")
-    return json.loads(pipe.json(docs).first().json)
+    return json.loads(serve._render(spark, text, annotators, "json")[1])

@@ -97,29 +97,6 @@ def _shingles(col, k: int = 3):
     return _shingles_of(_tokens(col), k)
 
 
-def _shingle_table(docs: DataFrame, k: int) -> DataFrame:
-    """(doc_id, sh): the per-doc distinct shingle array."""
-    return docs.withColumn("_tk", _tokens(F.col("text"))).select(
-        "doc_id", _shingles_of(F.col("_tk"), k).alias("sh")
-    )
-
-
-def _band_sigs(sh: DataFrame, n_bands: int) -> DataFrame:
-    """(doc_id, band, mh) from a shingle-array table."""
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.array_min(
-                F.transform("sh", lambda s: F.md5(F.concat(s, F.lit(f"#{b}"))))
-            ).alias("mh"),
-        )
-        for b in range(n_bands)
-    ])
-    return sh.select("doc_id", F.explode(bands).alias("x")).select(
-        "doc_id", F.col("x.band").alias("band"), F.col("x.mh").alias("mh")
-    )
-
-
 #: (n_bands → gram → [band-salted md5 hexes]) — see _shingle_mhs_kernel
 _MD5_BAND_CACHE: dict[int, dict[str, list[str]]] = {}
 #: token → truncated md5 int — see simhash()

@@ -582,10 +582,10 @@ def parse_sentence(
     return enhance_edges(words, pos, edges)
 
 
-def depparse_docs(df: DataFrame, model: str | None = None) -> DataFrame:
-    """DataFrame transform: + deps edge-list column (doc-level token indices).
-    ``model="rule"`` selects the deterministic clause parser."""
+def depparse_docs(df: DataFrame) -> DataFrame:
+    """DataFrame transform: + deps edge-list column (doc-level token
+    indices) from the trained parser."""
     from corenlp_spark.plans.fused import docs_of, map_docs, parse_phase
 
     return map_docs(df, {"deps": DEPS_TYPE},
-                    lambda pdf: {"deps": parse_phase(docs_of(pdf), model)})
+                    lambda pdf: {"deps": parse_phase(docs_of(pdf))})

@@ -525,13 +525,13 @@ def natlog_docs(df: DataFrame) -> DataFrame:
     mark instead of re-walking the tree. Narrow per-doc transform — output
     inherits the docs partitioning, no shuffle.
     """
-    from corenlp_spark.plans.fused import _annotate_one
+    from corenlp_spark.plans.fused import _annotate_batch
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in ("doc_id", "sent_idx", "tok_idx", "word", "polarity")}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                tokens, sentences, deps, _ = _annotate_one(spans)
+            ann = _annotate_batch(list(pdf["spans"]))
+            for doc_id, (tokens, sentences, deps, _) in zip(pdf["doc_id"], ann):
                 by_sent: dict[int, list] = {}
                 for e in deps:
                     by_sent.setdefault(e["sent_idx"], []).append(

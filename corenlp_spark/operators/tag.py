@@ -132,15 +132,16 @@ def _pos_constraints(words: list[str]) -> dict[int, str]:
 
 
 def pos_tag(words: list[str], sent_starts: set[int]) -> list[str]:
-    """Tag one document's token words with the trained averaged perceptron.
-    ``sent_starts``: indices starting a sentence (left context resets)."""
-    return _get_pos_model().predict_with_constraints(
-        words, _pos_constraints(words), sent_starts)
+    """Tag one document's token words — a batch of one over
+    pos_tag_batch. ``sent_starts``: indices starting a sentence (left
+    context resets)."""
+    return pos_tag_batch([(words, sent_starts)])[0]
 
 
 def pos_tag_batch(docs: list[tuple[list[str], set[int]]]) -> list[list[str]]:
-    """Batched pos_tag over many documents (one numpy score per token
-    position across the whole batch — see
+    """Tag many ``(words, sent_starts)`` documents with the trained averaged
+    perceptron under the punct/number/closed-class constraints, one numpy
+    score per token position across the whole batch (see
     AveragedPerceptronTagger.predict_with_constraints_batch)."""
     return _get_pos_model().predict_with_constraints_batch(
         [(words, _pos_constraints(words), starts) for words, starts in docs])

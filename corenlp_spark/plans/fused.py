@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from corenlp_spark.operators.coref import COREF_TYPE, detect_mentions, run_sieves
-from corenlp_spark.operators.depparse import DEPS_TYPE, parse_sentence
+from corenlp_spark.operators.depparse import DEPS_TYPE
 from corenlp_spark.operators.ner import NER_TOKENS_TYPE, tag_ner_batch
 from corenlp_spark.operators.openie import TRIPLES_SCHEMA, _Graph, extract_sentence
 from corenlp_spark.operators.tag import lemmatize, pos_tag_batch
@@ -85,23 +85,15 @@ def ner_phase(docs: list[Doc]) -> None:
             t["ner"], t["nner"] = x, y
 
 
-def parse_phase(docs: list[Doc], model: str | None = None) -> list[list[dict]]:
+def parse_phase(docs: list[Doc]) -> list[list[dict]]:
     """Dependency edges per doc (doc-level token indices, root head -1).
-    The trained parser decodes every sentence of the batch at once;
-    ``model="rule"`` runs the deterministic clause parser per sentence."""
-    segs = _segments(docs)
-    if model == "rule":
-        parses = [parse_sentence([t["word"] for t in seg],
-                                 [t["pos"] for t in seg],
-                                 [t["lemma"] for t in seg],
-                                 [t.get("ner", "O") for t in seg], model="rule")
-                  for _, _, seg in segs]
-    else:
-        from corenlp_spark.models.parser import get_trained_parser
+    The trained parser decodes every sentence of the batch at once."""
+    from corenlp_spark.models.parser import get_trained_parser
 
-        parses = get_trained_parser().parse_batch(
-            [([t["word"] for t in seg], [t["pos"] for t in seg])
-             for _, _, seg in segs])
+    segs = _segments(docs)
+    parses = get_trained_parser().parse_batch(
+        [([t["word"] for t in seg], [t["pos"] for t in seg])
+         for _, _, seg in segs])
     deps: list[list[dict]] = [[] for _ in docs]
     for (di, s, _), edges in zip(segs, parses):
         dd = deps[di]

@@ -1,11 +1,12 @@
-"""Batched decoders must equal their per-sentence twins exactly.
+"""Batched decoders must equal their slow reference decoders exactly.
 
-Round 4 moved the three model kernels (arc-standard parser, POS
-perceptron, NER Viterbi) to cross-sentence batched decoding (one numpy
-score per step for the whole Arrow batch — SURVEY §2.2 depparse row,
-VERDICT r3 #1). These tests pin the bitwise-equality contract: for every
-sentence, the batched decode must produce exactly the same output as the
-sequential per-sentence path.
+Each model (arc-standard parser, POS perceptron, NER Viterbi) has ONE
+inference decoder, batched across sentences (one numpy score per step for
+the whole Arrow batch — SURVEY §2.2 depparse row, VERDICT r3 #1); its
+per-sentence entry point is a batch of one. These tests keep one slow
+per-sentence reference per model and pin the bitwise-equality contract:
+for every sentence, the batched decode must produce exactly the reference
+output, and the same output in any batch.
 """
 
 from __future__ import annotations
@@ -35,10 +36,60 @@ def annotated_pool():
     return docs
 
 
+def _pos_reference(m, words, fixed, starts):
+    """Per-token greedy decode over the training-time scorer: fixed tags
+    win, the left context resets at each sentence start, an unknown word
+    gets only an open tag, no known feature gives NN, ties go to the
+    largest tag."""
+    from corenlp_spark.models.perceptron import _pos_features
+
+    out, prev, prev2 = [], "<s>", "<s>"
+    for i, w in enumerate(words):
+        if i in starts:
+            prev = prev2 = "<s>"
+        tag = fixed.get(i)
+        if tag is None:
+            feats = _pos_features(words, i, prev, prev2)
+            if not any(f in m.weights for f in feats):
+                tag = "NN"
+            else:
+                scores = m._score(feats)
+                cands = m.tags
+                if f"w={w.lower()}" not in m.weights:
+                    cands = [t for t in m.tags if t in m.OPEN_TAGS] or m.tags
+                tag = max(cands, key=lambda t: (scores.get(t, 0.0), t))
+        out.append(tag)
+        prev2, prev = prev, tag
+    return out
+
+
 def test_pos_batch_equals_sequential(annotated_pool):
+    from corenlp_spark.operators.tag import _get_pos_model, _pos_constraints
+
+    m = _get_pos_model()
     docs = [(w, s) for w, s, _ in annotated_pool]
-    seq = [pos_tag(w, s) for w, s in docs]
-    assert pos_tag_batch(docs) == seq
+    ref = [_pos_reference(m, w, _pos_constraints(w), s) for w, s in docs]
+    assert pos_tag_batch(docs) == ref
+
+
+def test_pos_batch_isolation(annotated_pool):
+    """A document tags the same alone, in a mixed batch and in a
+    reversed batch (no state leaks between the documents of a batch)."""
+    docs = [(w, s) for w, s, _ in annotated_pool]
+    mixed = pos_tag_batch(docs)
+    assert [pos_tag_batch([d])[0] for d in docs[:150]] == mixed[:150]
+    assert pos_tag_batch(list(reversed(docs))) == list(reversed(mixed))
+
+
+def test_pos_all_unknown_features_fall_back_to_nn():
+    """A position none of whose features has a weight tags NN."""
+    from corenlp_spark.models.perceptron import AveragedPerceptronTagger
+
+    m = AveragedPerceptronTagger.from_broadcastable(
+        {"tags": ["NN", "VB"], "weights": {}})
+    assert m.predict(["a", "b"]) == ["NN", "NN"]
+    batch = [(["a", "b"], {}, None), (["c"], {0: "VB"}, None)]
+    assert m.predict_with_constraints_batch(batch) == [["NN", "NN"], ["VB"]]
 
 
 def _sentence_segs(annotated_pool):
@@ -51,12 +102,44 @@ def _sentence_segs(annotated_pool):
     return segs
 
 
-def test_ner_batch_equals_sequential(annotated_pool):
-    from corenlp_spark.operators.ner import tag_ner_batch, tag_sentence_ner
+def _ner_model_inputs(annotated_pool):
+    from corenlp_spark.operators.ner import _ner_force_o
 
-    segs = _sentence_segs(annotated_pool)
-    seq = [tag_sentence_ner(w, p) for w, p in segs]
-    assert tag_ner_batch(segs) == seq
+    return [(w, p, _ner_force_o(w)) for w, p in _sentence_segs(annotated_pool)]
+
+
+def test_ner_batch_equals_sequential(annotated_pool):
+    """decode_batch vs the training-time per-sentence Viterbi over the
+    dict-scored emissions, with force-O rows pushed down by _NEG."""
+    from corenlp_spark.models.perceptron import _NEG, _ner_sent_features
+    from corenlp_spark.operators.ner import _get_ner_model
+
+    m = _get_ner_model()
+
+    def decode_ref(words, pos, force_o):
+        if not words:
+            return []
+        em = m._emissions_train(_ner_sent_features(words, pos))
+        for i in force_o:
+            em[i][1:] = [x + _NEG for x in em[i][1:]]
+        path = m._viterbi_train(em, m._trans_matrix_train())
+        return [m.labels[j] for j in path]
+
+    sents = _ner_model_inputs(annotated_pool)
+    assert m.decode_batch(sents) == [decode_ref(*s) for s in sents]
+
+
+def test_ner_batch_isolation(annotated_pool):
+    """A sentence decodes the same alone, in a mixed batch and in a
+    reversed batch (per-sentence offsets into the shared emission matrix
+    and the padded DP never cross)."""
+    from corenlp_spark.operators.ner import _get_ner_model
+
+    m = _get_ner_model()
+    sents = _ner_model_inputs(annotated_pool)
+    mixed = m.decode_batch(sents)
+    assert [m.decode_batch([s])[0] for s in sents[:150]] == mixed[:150]
+    assert m.decode_batch(list(reversed(sents))) == list(reversed(mixed))
 
 
 def test_parse_batch_equals_reference_decode(annotated_pool):

@@ -425,6 +425,22 @@ def test_pii_scan_and_redact(spark):
     assert red == "ssn [SSN] card [CARD] ip [IP]"
 
 
+def test_pii_counts_null_text_is_null(spark):
+    """The digit/'@' gate short-circuits only a text it rules out: a NULL
+    text counts NULL (as the ungated regexp_count does), a text without
+    digits or '@' counts 0."""
+    from corenlp_spark.functions.pii import PII_PATTERNS, pii_counts
+
+    df = spark.createDataFrame(
+        [("null", None), ("clean", "no digits or at signs here")],
+        "doc_id string, text string")
+    rows = {r["doc_id"]: r for r in
+            df.select("doc_id", *pii_counts(F.col("text"))).collect()}
+    kinds = [f"n_{kind}" for kind, _, _ in PII_PATTERNS]
+    assert all(rows["null"][k] is None for k in kinds)
+    assert all(rows["clean"][k] == 0 for k in kinds)
+
+
 def test_decontam_broadcast_overlap(spark):
     """8-gram benchmark decontamination: seeded overlap found, clean doc
     absent, and the corpus side joins the benchmark via BROADCAST (no

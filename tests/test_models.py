@@ -278,8 +278,7 @@ def test_trained_parser_on_spark(spark):
     from corenlp_spark.operators.tokenize import tokenize_docs
 
     ann = depparse_docs(
-        ner_docs(tag_docs(tokenize_docs(synth_docs(spark, 15)))),
-        model="trained")
+        ner_docs(tag_docs(tokenize_docs(synth_docs(spark, 15)))))
     rows = ann.collect()
     assert all(r["deps"] for r in rows if r["tokens"])
     n_roots = sum(1 for r in rows for e in r["deps"] if e["rel"] == "root")
